@@ -263,10 +263,14 @@ object Quality {
     // exchange (join-back on g, wide 8-token gram strings) to tag rows
     // with their doc frequency; this form carries the one needed doc_id
     // through the gram aggregation itself and the per-doc counts reduce
-    // map-side to ~docs-sized exchanges. Plan: 4 exchanges → 3, and the
-    // eliminated one was corpus-sized (same-session A/B at sf0.1:
-    // 0.84-1.8 s → 0.30-0.34 s, parity exact; the min(doc_id) of a
-    // filtered nd=1 group is partition-order-free by uniqueness).
+    // map-side to ~docs-sized exchanges. Plan (explain at sf0.01, AQE
+    // off): 5 exchange nodes where the r16-r19 shape had 4 — the spread
+    // repartition under the cache, hash on g, hash on d, the broadcast
+    // of the per-doc unique counts and the final range sort — each
+    // carrying less data than the corpus-sized join-back it replaced
+    // (same-session A/B at sf0.1: 0.84-1.8 s → 0.30-0.34 s, parity
+    // exact; the min(doc_id) of a filtered nd=1 group is
+    // partition-order-free by uniqueness).
     val uniqPerDoc = grams.groupBy($"g")
       .agg(count(lit(1)).as("nd"), min($"doc_id").as("d"))
       .filter($"nd" === 1)

@@ -2041,9 +2041,13 @@ object Sources {
     // surface pinned to a fixed policy value (timestamps stay out of
     // the oracle: wall clock)
     graft.sources.GraftStore.branchSetRetain(main, "audit", 86400000L)
-    s.conf.set("spark.sql.catalog.gbrq", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gbrq.root", root)
-    val meta = s.sql("SELECT branch, n_rows, retain_for_ms FROM gbrq.`main$branches`")
+    // catalog on a derived session: CatalogManager caches the first
+    // instance per session, so registering it on `s` would leak conf
+    // and pin every later call to this call's root
+    val sm = s.newSession()
+    sm.conf.set("spark.sql.catalog.gbrq", "graft.sources.GraftCatalog")
+    sm.conf.set("spark.sql.catalog.gbrq.root", root)
+    val meta = sm.sql("SELECT branch, n_rows, retain_for_ms FROM gbrq.`main$branches`")
       .select(concat(lit("meta:"), $"branch").as("side"),
         lit(-1L).as("bucket"), $"n_rows",
         $"retain_for_ms".as("sum_key"), lit(0.0).as("sum_price"))
@@ -2082,12 +2086,7 @@ object Sources {
       val root = Util.managedTempDir("graft_upsert_")
       sx.conf.set("spark.sql.catalog.graftu", "graft.sources.GraftCatalog")
       sx.conf.set("spark.sql.catalog.graftu.root", root)
-      // size the session for BATCH-sized work: each micro-batch is a few
-      // thousand rows, so cluster-sized shuffle fan-out (32 partitions)
-      // and AQE's per-stage replanning are pure per-epoch overhead here —
-      // the same dial a real CDC-apply job sets from its batch volume.
-      sx.conf.set("spark.sql.shuffle.partitions", "4")
-      sx.conf.set("spark.sql.adaptive.enabled", "false")
+      batchSized(sx)
       // the target is a compact CDC dimension (one file after every
       // merge): the runtime group-filter subquery each MERGE plans can
       // never prune a file, so it is one pure-overhead Spark job per
@@ -2156,9 +2155,7 @@ object Sources {
       val root = Util.managedTempDir("graft_upsertmor_")
       sx.conf.set("spark.sql.catalog.graftum", "graft.sources.GraftCatalog")
       sx.conf.set("spark.sql.catalog.graftum.root", root)
-      // batch-sized dials, same rationale as q_stream_upsert
-      sx.conf.set("spark.sql.shuffle.partitions", "4")
-      sx.conf.set("spark.sql.adaptive.enabled", "false")
+      batchSized(sx)
       sx.conf.set("spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled",
         "false")
       sx.sql(
@@ -2397,8 +2394,7 @@ object Sources {
     val (s2, t) = upsertEqSession.computeIfAbsent(s"${Util.sessionKey(s)}:$dir", _ => {
       val sx = s.newSession()
       val root = Util.managedTempDir("graft_upserteq_")
-      sx.conf.set("spark.sql.shuffle.partitions", "4")
-      sx.conf.set("spark.sql.adaptive.enabled", "false")
+      batchSized(sx)
       val path = s"$root/t"
       // seed the empty table (schema-only v1) the first apply commits onto
       sx.createDataFrame(sx.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -2649,27 +2645,13 @@ object Sources {
     * views are late-bound) → SHOW VIEWS/rename surfaces. Nested views
     * (a view over a view) resolve through the same path. */
   val qCatalogView: Q = (s, dir) => {
-    // view DDL/resolution rides GraftExtensions' hint-batch rule — a
-    // plain newSession has no extension hook, so this query builds a
-    // REAL extension session on the shared context (memoized: session
-    // construction re-registers analyzer state, not per-run work)
+    // view DDL/resolution rides GraftExtensions' hint-batch rule, so
+    // this query runs on the extension session (viewSessionOf); its
     // catalog root is pinned at session creation: CatalogManager caches
     // the initialized catalog instance, so later conf writes would not
     // re-root it — the DDL below is re-runnable instead (DROP IF EXISTS
     // + CREATE OR REPLACE), the idempotent-DDL shape real jobs use
-    val s2 = viewSession.computeIfAbsent(Util.sessionKey(s), _ => {
-      val sess = org.apache.spark.sql.SparkSession.builder()
-        .master(s.sparkContext.master)
-        .withExtensions(new graft.GraftExtensions())
-        .config("spark.sql.shuffle.partitions",
-          s.conf.get("spark.sql.shuffle.partitions"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .create()
-      sess.conf.set("spark.sql.catalog.gview", "graft.sources.GraftCatalog")
-      sess.conf.set("spark.sql.catalog.gview.root",
-        Util.managedTempDir("graft_view_"))
-      sess
-    })
+    val s2 = viewSessionOf(s)
     table(s2, dir, "orders").createOrReplaceTempView("ord_v")
     s2.sql("DROP TABLE IF EXISTS gview.base")
     s2.sql(
@@ -2746,6 +2728,26 @@ object Sources {
   private val viewSession = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.SparkSession]
 
+  /** A REAL GraftExtensions session on `s`'s context with catalog
+    * `gview` — a plain newSession has no extension hook (memoized per
+    * parent: session construction re-registers analyzer state, not
+    * per-run work). */
+  private def viewSessionOf(
+      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    viewSession.computeIfAbsent(Util.sessionKey(s), _ => {
+      val sess = org.apache.spark.sql.SparkSession.builder()
+        .master(s.sparkContext.master)
+        .withExtensions(new graft.GraftExtensions())
+        .config("spark.sql.shuffle.partitions",
+          s.conf.get("spark.sql.shuffle.partitions"))
+        .config("spark.sql.session.timeZone", "UTC")
+        .create()
+      sess.conf.set("spark.sql.catalog.gview", "graft.sources.GraftCatalog")
+      sess.conf.set("spark.sql.catalog.gview.root",
+        Util.managedTempDir("graft_view_"))
+      sess
+    })
+
   /** table_changes fixture tables, keyed by extension-session UUID. */
   private val cdfSqlWritten = new java.util.concurrent.ConcurrentHashMap[String, String]
 
@@ -2761,19 +2763,7 @@ object Sources {
     * is the same content-determined union. Version-range and
     * current-catalog forms pinned in GraftCatalogSpec. */
   val qStoreCdfSql: Q = (s, dir) => {
-    val s2 = viewSession.computeIfAbsent(Util.sessionKey(s), _ => {
-      val sess = org.apache.spark.sql.SparkSession.builder()
-        .master(s.sparkContext.master)
-        .withExtensions(new graft.GraftExtensions())
-        .config("spark.sql.shuffle.partitions",
-          s.conf.get("spark.sql.shuffle.partitions"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .create()
-      sess.conf.set("spark.sql.catalog.gview", "graft.sources.GraftCatalog")
-      sess.conf.set("spark.sql.catalog.gview.root",
-        Util.managedTempDir("graft_view_"))
-      sess
-    })
+    val s2 = viewSessionOf(s)
     cdfSqlWritten.computeIfAbsent(s"${Util.sessionKey(s2)}:$dir", _ => {
       val root = Util.managedTempDir("graft_cdfsql_")
       s2.conf.set("spark.sql.catalog.gcs", "graft.sources.GraftCatalog")
@@ -2812,7 +2802,7 @@ object Sources {
     * content-determined tail of the full feed. */
   val qStoreCdfSqlTs: Q = (s, dir) => {
     qStoreCdfSql(s, dir).count() // ensure fixture table + session exist
-    val s2 = viewSession.get(Util.sessionKey(s))
+    val s2 = viewSessionOf(s)
     val root = cdfSqlWritten.get(s"${Util.sessionKey(s2)}:$dir")
     val commits = graft.sources.GraftStore.commitTimestamps(s"$root/ctab").toMap
     def utc(ms: Long): String = java.time.Instant.ofEpochMilli(ms)
@@ -3322,20 +3312,30 @@ object Sources {
     dmlRoots.computeIfAbsent(s"${Util.sessionKey(s)}:$dir:$tag",
       _ => Util.managedTempDir(s"graft_$tag"))
 
-  /** MERGE INTO (round 7) — the lakehouse upsert, run copy-on-write
-    * through the connector's group-based row-level operation: Spark
-    * rewrites the MERGE into a ReplaceData plan whose scan carries a
-    * runtime group filter on the `_file` METADATA column (the matching
-    * rows' files, computed as a subquery), so only files containing
-    * matched keys are rewritten — unmatched files are preserved verbatim
-    * by the manifest commit (`current - scanned + written`, one atomic
-    * pointer swap, pre-merge snapshot still time-travelable). Exercises
-    * all three action kinds: conditional DELETE, UPDATE, and INSERT.
-    * The oracle replays the same merge semantics as joins over the
-    * source parquet — the hash check proves matched/unmatched routing,
-    * action conditions, and the copy-on-write commit end-to-end. At
-    * 100 TB this is the CDC-ingest shape: write amplification bounded
-    * by files actually containing matches, not table size. */
+  /** Sizes a derived session for BATCH-sized DML: each micro-batch or
+    * one-batch MERGE/UPDATE covers a few thousand to ~50k rows, so
+    * cluster-sized shuffle fan-out (32 partitions) and AQE's per-stage
+    * replanning are pure per-commit overhead — the dial a real CDC-apply
+    * or SCD2 job sets from its batch volume. Results are row-identical
+    * (same commits, same history). */
+  private def batchSized(
+      s2: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
+    s2.conf.set("spark.sql.shuffle.partitions", "4")
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2
+  }
+
+  /** A batch-sized session derived from `s` with store catalog `catalog`
+    * rooted at the memoized `dmlRoot(s, dir, tag)`; `s` itself is never
+    * touched. */
+  private def dmlSession(s: org.apache.spark.sql.SparkSession, dir: String,
+      catalog: String, tag: String): org.apache.spark.sql.SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set(s"spark.sql.catalog.$catalog", "graft.sources.GraftCatalog")
+    s2.conf.set(s"spark.sql.catalog.$catalog.root", dmlRoot(s, dir, tag))
+    batchSized(s2)
+  }
+
   /** SCD TYPE-2 CDC APPLY (round 11) — the dimension-history maintenance
     * loop every warehouse runs nightly, on the lakehouse MERGE surface:
     * where q_stream_upsert keeps only the LATEST row per key (type 1),
@@ -3357,17 +3357,7 @@ object Sources {
     * relationally from the two batch definitions — every row of every
     * version checked, not an aggregate. */
   val qStoreScd2: Q = (s, dir) => {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.catalog.graftsd", "graft.sources.GraftCatalog")
-    s2.conf.set("spark.sql.catalog.graftsd.root", dmlRoot(s, dir, "scd2_"))
-    // batch-sized dials (round 20) — the q_stream_upsert rationale
-    // applied to the SCD2 apply loop: each batch is ~50k rows, so
-    // cluster-sized shuffle fan-out and AQE's per-stage replanning are
-    // pure per-epoch overhead on the 2x(MERGE + INSERT) sequence. A real
-    // SCD2 maintainer sets this from its batch volume; results are
-    // row-identical (same commits, same history).
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = dmlSession(s, dir, "graftsd", "scd2_")
     table(s2, dir, "orders").createOrReplaceTempView("ord_scd")
     s2.sql("DROP TABLE IF EXISTS graftsd.d")
     s2.sql(
@@ -3421,15 +3411,7 @@ object Sources {
     * At 100 TB this is the difference between a CDC batch costing a few
     * MB of sidecars and costing a rewrite of every touched file. */
   val qStoreMergeMor: Q = (s, dir) => {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.catalog.graftmr", "graft.sources.GraftCatalog")
-    s2.conf.set("spark.sql.catalog.graftmr.root", dmlRoot(s, dir, "mor_"))
-    // batch-sized dials (round 20) — the q_stream_upsert/q_store_scd2
-    // rationale: one-batch DML over ~50k rows gains nothing from
-    // cluster-sized shuffle fan-out or AQE's per-stage replanning;
-    // results are row-identical (same commits, same history).
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = dmlSession(s, dir, "graftmr", "mor_")
     table(s2, dir, "orders").createOrReplaceTempView("ord_mor")
     s2.sql("DROP TABLE IF EXISTS graftmr.t")
     s2.sql(
@@ -3452,16 +3434,22 @@ object Sources {
         |FROM graftmr.t GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
+  /** MERGE INTO (round 7) — the lakehouse upsert, run copy-on-write
+    * through the connector's group-based row-level operation: Spark
+    * rewrites the MERGE into a ReplaceData plan whose scan carries a
+    * runtime group filter on the `_file` METADATA column (the matching
+    * rows' files, computed as a subquery), so only files containing
+    * matched keys are rewritten — unmatched files are preserved verbatim
+    * by the manifest commit (`current - scanned + written`, one atomic
+    * pointer swap, pre-merge snapshot still time-travelable). Exercises
+    * all three action kinds: conditional DELETE, UPDATE, and INSERT.
+    * The oracle replays the same merge semantics as joins over the
+    * source parquet — the hash check proves matched/unmatched routing,
+    * action conditions, and the copy-on-write commit end-to-end. At
+    * 100 TB this is the CDC-ingest shape: write amplification bounded
+    * by files actually containing matches, not table size. */
   val qStoreMerge: Q = (s, dir) => {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.catalog.graftm", "graft.sources.GraftCatalog")
-    s2.conf.set("spark.sql.catalog.graftm.root", dmlRoot(s, dir, "merge_"))
-    // batch-sized dials (round 20) — the q_stream_upsert/q_store_scd2
-    // rationale: one-batch DML over ~50k rows gains nothing from
-    // cluster-sized shuffle fan-out or AQE's per-stage replanning;
-    // results are row-identical (same commits, same history).
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = dmlSession(s, dir, "graftm", "merge_")
     table(s2, dir, "orders").createOrReplaceTempView("ord")
     s2.sql("DROP TABLE IF EXISTS graftm.t")
     s2.sql(
@@ -3498,12 +3486,7 @@ object Sources {
     * full three-way split (kept/updated/inserted) from source parquet.
     * MOR-path parity pinned in GraftStoreMorSpec. */
   val qStoreMergeEvolve: Q = (s, dir) => {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.catalog.graftme", "graft.sources.GraftCatalog")
-    s2.conf.set("spark.sql.catalog.graftme.root", dmlRoot(s, dir, "mergeev_"))
-    // batch-sized dials (round 20) — see qStoreMerge
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = dmlSession(s, dir, "graftme", "mergeev_")
     table(s2, dir, "orders").createOrReplaceTempView("ord_ev")
     s2.sql("DROP TABLE IF EXISTS graftme.t")
     s2.sql(
@@ -3538,12 +3521,7 @@ object Sources {
     * never rewrite). Without this arm a sync needs a MERGE plus a
     * separate anti-join DELETE — two commits, a consistency window. */
   val qStoreMergeNbs: Q = (s, dir) => {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.catalog.graftnb", "graft.sources.GraftCatalog")
-    s2.conf.set("spark.sql.catalog.graftnb.root", dmlRoot(s, dir, "mergenbs_"))
-    // batch-sized dials (round 20) — see qStoreMerge
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = dmlSession(s, dir, "graftnb", "mergenbs_")
     table(s2, dir, "orders").createOrReplaceTempView("ord_nbs")
     s2.sql("DROP TABLE IF EXISTS graftnb.t")
     s2.sql(
@@ -3576,15 +3554,7 @@ object Sources {
     * over source parquet; matching hashes prove the two DMLs composed
     * correctly through two manifest commits. */
   val qStoreDml: Q = (s, dir) => {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.catalog.graftu", "graft.sources.GraftCatalog")
-    s2.conf.set("spark.sql.catalog.graftu.root", dmlRoot(s, dir, "dml_"))
-    // batch-sized dials (round 20) — the q_stream_upsert/q_store_scd2
-    // rationale: one-batch DML over ~50k rows gains nothing from
-    // cluster-sized shuffle fan-out or AQE's per-stage replanning;
-    // results are row-identical (same commits, same history).
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = dmlSession(s, dir, "graftu", "dml_")
     table(s2, dir, "orders").createOrReplaceTempView("ord")
     s2.sql("DROP TABLE IF EXISTS graftu.t")
     s2.sql(

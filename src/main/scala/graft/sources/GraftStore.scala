@@ -1971,10 +1971,13 @@ object GraftStore {
     // job-launch+shuffle rounds per commit. Commit content, file names
     // and the manifest are byte-identical to the sequential order.
     val sidecarsF: java.util.concurrent.Future[Seq[String]] = appendRows match {
-      case Some(_) => commitPool.submit(
-        new java.util.concurrent.Callable[Seq[String]] {
-          override def call(): Seq[String] = writeSidecars()
-        })
+      // withThreadLocalCaptured hands the pool thread THIS caller's
+      // local properties (job group, description, root execution id):
+      // a pool thread otherwise keeps the ones it inherited from
+      // whichever caller created it, and cancelJobGroup would miss the job
+      case Some(_) => org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], commitPool)(
+        writeSidecars())
       case _ => null // delete-only commits have a single job; run inline
     }
     val fresh: Seq[FileEntry] = appendRows match {
@@ -4948,8 +4951,6 @@ class GraftStoreWrite(path: String, schema: StructType, truncateFirst: Boolean,
   private def partitionTerms: Seq[GraftStore.PartTerm] =
     GraftStore.partitionTermsOf(partitionBy)
   private def sourceCols: Seq[String] = partitionTerms.map(_.source).distinct
-  private def orderCols: Seq[String] =
-    (sourceCols ++ sortBy.toSeq).distinct
   // Distribution: identity terms hash-cluster on their column (same
   // value → same task → one file per value); bucket terms cluster on
   // the DERIVED bucket expression — the catalog's V2 `bucket` function

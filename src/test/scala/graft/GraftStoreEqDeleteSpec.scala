@@ -336,4 +336,46 @@ class GraftStoreEqDeleteSpec extends SparkSuite {
       new File(t, "_manifest")).isEmpty)
     assert(readT(t).count() == 95)
   }
+
+  test("upsertByKey: every job of a commit carries the caller's job group, pool thread included") {
+    import scala.jdk.CollectionConverters._
+    val t = fresh("grp")
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(e.time -> Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    sc.addSparkListener(listener)
+    try {
+      // three commits: the commit pool has two threads, so the third
+      // commit's sidecar job runs on a thread an earlier commit created
+      val windows = (1 to 3).map { i =>
+        val group = s"eqd-upsert-$i"
+        sc.setJobGroup(group, s"upsert commit $i")
+        val t0 = System.currentTimeMillis()
+        try GraftStore.upsertByKey(spark, t, Seq("k"),
+          spark.range(i * 100, i * 100 + 50, 1, 2).selectExpr("id AS k", "id AS v"))
+        finally sc.clearJobGroup()
+        val t1 = System.currentTimeMillis()
+        Thread.sleep(20) // keep the commits' job-start windows disjoint
+        (group, t0, t1)
+      }
+      // the listener bus delivers in order: once this marker job's start
+      // arrives, every commit job's start has arrived before it
+      sc.setJobGroup("eqd-upsert-drain", "drain")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!starts.asScala.exists(_._2 == "eqd-upsert-drain") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+      windows.foreach { case (group, t0, t1) =>
+        val groups = starts.asScala.collect {
+          case (ts, g) if ts >= t0 && ts <= t1 => g
+        }.toSeq
+        assert(groups.size >= 2, s"$group: expected the data and sidecar jobs, saw $groups")
+        assert(groups.forall(_ == group), s"$group: jobs carried groups $groups")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -129,4 +129,20 @@ class QueriesSpec extends SparkSuite {
     val got = SparkEntry.queries("q_join_asof")(spark, sfDir)
     assert(got.filter($"asof_ts" > $"ts").count() == 0)
   }
+
+  test("store branch and batch-sized DML builders leave the caller's conf untouched") {
+    // a fresh session: the registry memoizes per session, and a leak an
+    // earlier test left on `spark` would mask this one
+    val s = spark.newSession()
+    Seq("q_store_branch", "q_stream_upsert", "q_stream_upsert_mor",
+      "q_stream_upsert_eq", "q_store_scd2", "q_store_merge_mor",
+      "q_store_merge", "q_store_merge_evolve", "q_store_merge_nbs",
+      "q_store_dml").foreach { name =>
+      val before = s.conf.getAll
+      SparkEntry.queries(name)(s, sfDir).collect()
+      val after = s.conf.getAll
+      val changed = (after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)
+      assert(changed.isEmpty, s"$name changed the caller's conf: $changed")
+    }
+  }
 }
